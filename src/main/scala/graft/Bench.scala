@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: one JSON line of per-query wall times at the target
   * scale factor. A warm-up pass at the smallest SF first absorbs JVM/codegen
@@ -9,38 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts (Tables.events)
-      .config("spark.ui.enabled", "false")
-      // file:// without the Hadoop CRC sidecar layer (see
-      // NoCrcLocalFileSystem's scaladoc: halves local file creates and the
-      // fork-per-permission-call tail behind them; data bytes untouched —
-      // parquet carries its own page checksums). GRAFT_LOCAL_FS_CRC=1
-      // restores the stock checksummed local fs.
-      .config("spark.hadoop.fs.file.impl",
-        if (sys.env.get("GRAFT_LOCAL_FS_CRC").contains("1"))
-          classOf[org.apache.hadoop.fs.LocalFileSystem].getName
-        else classOf[graft.sources.NoCrcLocalFileSystem].getName)
-      // Artifact SESSION ISOLATION off (r18, measured; GRAFT_ARTIFACT_ISOLATION=1
-      // restores the 4.x default): every StreamingQuery runs on a session
-      // CLONE, and with isolation on each clone gets its own artifact
-      // classloader — which KEYS the whole-stage-codegen compilation cache
-      // (CodeGenerator.cache is per-classloader since 4.x), so every
-      // streaming query RUN re-Janino-compiles every generated class even
-      // when the code is byte-identical (JFR: 698 KeyLock compile-waits per
-      // q217 pair-run, ~27 s of executor thread-wait; 162 with isolation
-      // off — the timed run then hits the cache). This engine adds no
-      // per-session artifacts (no addArtifact anywhere), so isolation buys
-      // nothing and only defeats compile reuse; a single-tenant production
-      // driver running repeated micro-batch work wants the same setting.
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.get("GRAFT_ARTIFACT_ISOLATION").contains("1").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val warmDir = {
       val w = "/root/testdata/sf0.001"
@@ -127,15 +95,8 @@ object Bench {
     val results = names.flatMap(n => timed.flatMap(_.get(n)).minOption.map(n -> _)).toMap
     val failed  = names.filterNot(results.contains).sorted
     if (failed.nonEmpty) System.err.println(s"[bench] failed: ${failed.mkString(",")}")
-    // Default budget 1500 (was 1850): the 2000-char tail window must also
-    // absorb sbt's "[success]" footer (~70 chars) plus any stray trailing
-    // WARN a daemon thread emits after the line — 1500 leaves ~430 chars
-    // of post-line headroom even in the worst case (see the shutdown
-    // ordering below for the primary defense). BenchLineSpec replays the
-    // tail capture against both.
-    val lineBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_LINE_BUDGET", "1500").toInt
     val sfShort = sfDir.stripSuffix("/").split('/').last
-    val printed = buildLine(results, failed, names, sfShort, lineBudget)
+    val printed = buildLine(results, failed, names, sfShort, LineBudget)
     val qsFull = results.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -167,6 +128,15 @@ object Bench {
     println(printed)
     System.out.flush()
   }
+
+  /** Printed-line budget 1500 (was 1850): the 2000-char tail window must
+    * also absorb sbt's "[success]" footer (~70 chars) plus any stray
+    * trailing WARN a daemon thread emits after the line — 1500 leaves ~430
+    * chars of post-line headroom even in the worst case (see the shutdown
+    * ordering in main for the primary defense). BenchLineSpec replays the
+    * tail capture against both.
+    */
+  private val LineBudget = 1500
 
   private def sec(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `explain("formatted")` for a comma-separated list of registered
   * queries to `<outDir>/<name>_<suffix>.txt` — the per-round before/after
@@ -13,15 +12,7 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]")
     val (outDir, suffix, list) = (args(0), args(1), args(2))
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     list.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>

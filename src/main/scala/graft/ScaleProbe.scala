@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SCALE-PROBE CORPUS SYNTHESIS — builds an N× replica of a harness scale
@@ -41,7 +40,7 @@ import org.apache.spark.sql.functions._
   * block = ~100× pairs — the documented remedy is k ∝ n (more clusters),
   * not a different operator.
   *
-  * Output is written multi-file (32 shuffle partitions per table), so
+  * Output is written multi-file (one file per cpu per table), so
   * scans split naturally — the `Tables.spread` single-row-group shim stays
   * harmless but is no longer what creates scan parallelism.
   *
@@ -55,15 +54,8 @@ object ScaleProbe {
     val src      = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out      = if (args.length > 1) args(1) else "/tmp/graft-scale"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val cpus     = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus     = GraftSession.cpus
+    val spark    = GraftSession(cpus)
 
     def shift(c: String, i: Int) = col(c) + lit(i * KeyOffset)
     // suffix every whitespace token of `c` with ~i (copy 0: untouched)
@@ -113,7 +105,7 @@ object ScaleProbe {
       val unioned = copies.reduce(_.unionByName(_))
       // multi-file output so scans split; repartition (not coalesce) to
       // break the per-copy lineage into evenly sized files
-      unioned.repartition(cpus.toInt)
+      unioned.repartition(cpus)
         .write.mode("overwrite").parquet(s"${out.stripSuffix("/")}/$name.parquet")
       val n = spark.read.parquet(s"${out.stripSuffix("/")}/$name.parquet").count()
       println(s"[scale] $name: ${if (isDim) "dim (1 copy)" else s"$replicas copies"} -> $n rows")

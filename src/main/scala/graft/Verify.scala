@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,34 +8,15 @@ object Verify {
     // optional 3rd arg: comma-separated query names — dev-loop filter; the
     // driver always runs the full set (2 args).
     val only: Set[String] = if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts (Tables.events)
-      // The driver hashes our parquet via pyarrow→pandas. INT96 (the
-      // verified-green physical type for 187 r10 queries) reads there as
-      // NAIVE timestamp[ns] — matching DuckDB's naive oracle strings.
-      // TIMESTAMP_MICROS would read as tz-aware (`+00:00` suffix) and
-      // mismatch every timestamp column, so pin INT96 explicitly; ns
-      // safety is instead guaranteed by keeping every written timestamp
-      // below 2262-04-11 (see EventQueries.ScdOpenEnd).
-      .config("spark.sql.parquet.outputTimestampType", "INT96")
-      .config("spark.ui.enabled", "false")
-      // same local-fs treatment as Bench (NoCrcLocalFileSystem scaladoc);
-      // checksum sidecars never reach the written bytes the driver hashes
-      .config("spark.hadoop.fs.file.impl",
-        if (sys.env.get("GRAFT_LOCAL_FS_CRC").contains("1"))
-          classOf[org.apache.hadoop.fs.LocalFileSystem].getName
-        else classOf[graft.sources.NoCrcLocalFileSystem].getName)
-      // same artifact-isolation treatment as Bench (see Bench.scala): the
-      // codegen cache is classloader-keyed and session clones (every
-      // StreamingQuery) otherwise re-compile every generated class per run
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.get("GRAFT_ARTIFACT_ISOLATION").contains("1").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // The driver hashes our parquet via pyarrow→pandas. INT96 (the
+    // verified-green physical type for 187 r10 queries) reads there as
+    // NAIVE timestamp[ns] — matching DuckDB's naive oracle strings.
+    // TIMESTAMP_MICROS would read as tz-aware (`+00:00` suffix) and
+    // mismatch every timestamp column, so pin INT96 explicitly; ns
+    // safety is instead guaranteed by keeping every written timestamp
+    // below 2262-04-11 (see EventQueries.ScdOpenEnd).
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -89,113 +89,76 @@ object StreamQueries {
     * size state partitions to live-state volume per store, independent of
     * the batch shuffle width. Scoped per run via [[withStatePartitions]] —
     * the fresh checkpoint pins the count at query start, and the session
-    * conf is restored before the registered query returns.
-    * `GRAFT_STATE_PARTITIONS` overrides the count — the second measured
-    * knob of SCALE.md §v2-premium.
+    * conf is restored before the registered query returns. 8 is the
+    * optimum of a measured U-curve (SCALE.md §Round-14 v2-premium: 4
+    * partitions cost +64% and 16 cost +19% on the 100× v2 rows).
     */
-  private val StreamStatePartitions =
-    sys.env.get("GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse(8)
+  private val StreamStatePartitions = 8
 
-  /** Checkpoint I/O plumbing for the bounded-stream scope (r17, measured —
-    * the two knobs remove LOCAL-ONLY per-file overhead, not work):
+  /** The bounded-stream scope's session confs:
     *
+    *   - [[StreamStatePartitions]] shuffle partitions (see there).
     *   - `spark.sql.streaming.checkpoint.fileChecksum.enabled=false`
-    *     (Spark 4.0 behavior): 4.1's ChecksumCheckpointFileManager writes a
-    *     `.crc` SIDECAR per checkpoint file through a blocking helper pool
-    *     (`awaitResult` inside every state-store commit in the jstack
-    *     profile) — on the local fs that sidecar is then ALSO checksummed
-    *     by Hadoop (`.delta.crc.crc` files observed), so one delta commit
-    *     costs 4+ file creates. At cloud scale the same sidecars double the
-    *     object-store request rate on the hot path; corruption detection is
-    *     a deployment policy, so it rides an env: `GRAFT_CKPT_CHECKSUM=1`
-    *     restores the 4.1 default.
+    *     (r17, measured; Spark 4.0 behavior): 4.1's
+    *     ChecksumCheckpointFileManager writes a `.crc` SIDECAR per
+    *     checkpoint file through a blocking helper pool (`awaitResult`
+    *     inside every state-store commit in the jstack profile) — on the
+    *     local fs that sidecar is then ALSO checksummed by Hadoop
+    *     (`.delta.crc.crc` files observed), so one delta commit costs 4+
+    *     file creates. At cloud scale the same sidecars double the
+    *     object-store request rate on the hot path.
     *   - FileSystemBasedCheckpointFileManager instead of the FileContext
-    *     default: on a no-native-lib local fs, every FileContext file
-    *     status shells out `readlink` (fork+exec per offsets/commits/delta
-    *     probe — 21.5k forks per 4-row bench run measured, halved with
-    *     these knobs). The FileSystem-based manager is the documented
-    *     alternative with identical rename-based atomic-write semantics on
-    *     posix; production checkpoint stores (HDFS/S3/DBFS) pick their own
-    *     manager, so the local default only unwinds a Linux-fork artifact.
-    *     `GRAFT_CKPT_FC_MANAGER=1` restores the FileContext default.
+    *     default (r17, measured): on a no-native-lib local fs, every
+    *     FileContext file status shells out `readlink` (fork+exec per
+    *     offsets/commits/delta probe — 21.5k forks per 4-row bench run
+    *     measured, halved with these two confs). The FileSystem-based
+    *     manager is the documented alternative with identical rename-based
+    *     atomic-write semantics on posix; production checkpoint stores
+    *     (HDFS/S3/DBFS) pick their own manager, so the local default only
+    *     unwinds a Linux-fork artifact.
+    *   - AQE OFF (r17, measured): the stream itself already runs
+    *     AQE-disabled (stateful workloads), so the conf only affects the
+    *     foreachBatch reduction frames — which are domain-bounded by design
+    *     (closed-window summaries, dimension-sized at ANY corpus size, so
+    *     the reasoning is scale-independent). On that many-tiny-stages
+    *     shape AQE's per-stage materialize-replan-submit cycle dominates
+    *     wall clock: two interleaved A/B rounds on the q171/q216/q217/q219
+    *     rows read 56.1 vs 26.7 s and 30.3 vs 16.8 s (on vs off) — ~2x.
+    *     The isolated four-axis reduction alone reproduces it (3.4 s
+    *     AQE-off vs 4.6-7.5 s AQE-on, identical inputs).
     */
-  private val CkptManagerConfs: Seq[(String, Option[String])] = Seq(
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-      (if (sys.env.get("GRAFT_CKPT_CHECKSUM").contains("1")) None else Some("false")),
+  private val StreamScopeConfs: Seq[(String, Option[String])] = Seq(
+    "spark.sql.shuffle.partitions" -> Some(StreamStatePartitions.toString),
+    "spark.sql.adaptive.enabled" -> Some("false"),
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> Some("false"),
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      (if (sys.env.get("GRAFT_CKPT_FC_MANAGER").contains("1")) None
-       else Some("org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")))
+      Some("org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"))
 
-  private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
-    val saved    = s.conf.get("spark.sql.shuffle.partitions")
-    val savedAqe = s.conf.get("spark.sql.adaptive.enabled")
-    val savedCkpt = CkptManagerConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
-      CkptManagerConfs.foreach { case (k, v) => v.foreach(s.conf.set(k, _)) }
-      // AQE OFF for the scope by default (r17, measured; GRAFT_STREAM_AQE=1
-      // restores it): the stream itself already runs AQE-disabled
-      // (stateful workloads), so the conf only affects the foreachBatch
-      // reduction frames — which are domain-bounded by design
-      // (closed-window summaries, dimension-sized at ANY corpus size, so
-      // the reasoning is scale-independent). On that many-tiny-stages
-      // shape AQE's per-stage materialize-replan-submit cycle dominates
-      // wall clock: two interleaved A/B rounds on the q171/q216/q217/q219
-      // rows read 56.1 vs 26.7 s and 30.3 vs 16.8 s (on vs off) — ~2x.
-      // The isolated four-axis reduction alone reproduces it (3.4 s
-      // AQE-off vs 4.6-7.5 s AQE-on, identical inputs).
-      s.conf.set("spark.sql.adaptive.enabled",
-        (sys.env.get("GRAFT_STREAM_AQE") match {
-          case Some(v) => v == "1"
-          case None    => false
-        }).toString)
-      body
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", saved)
-      s.conf.set("spark.sql.adaptive.enabled", savedAqe)
-      savedCkpt.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
-    }
-  }
+  private def withStatePartitions[T](s: SparkSession)(body: => T): T =
+    graft.GraftSession.withConfs(s, StreamScopeConfs: _*)(body)
 
   /** Pin the RocksDB state-store provider (required by the state API v2
     * rows) for the scope of `body`, restoring the session conf after.
-    * CHANGELOG checkpointing is ON by default for the scope (r18,
-    * measured — `GRAFT_ROCKSDB_CHANGELOG=0` restores the snapshot-per-
-    * commit form): with the r17/r18 fixed costs removed (per-file fork
-    * tails, per-run codegen recompiles) the per-commit full-snapshot
-    * upload became visible — every commit created and `rm -rf`-ed a local
-    * checkpoint dir per store (~360 forked deletes per two-row run traced
-    * via PATH wrappers) — and the changelog form now wins ~8-15% on the
-    * v2 rows in interleaved A/B (4.52/4.68 s vs 4.90/5.53 s on
-    * q181+q203+q204+q207) where the r14 measurement (SCALE.md
-    * §v2-premium) found it wall-neutral under the old fixed costs. The
-    * r14 100× tail already showed changelog neutral-to-better at depth
-    * (72.1 vs 72.6 s), so the flip carries no known deep-scale inversion;
-    * at cloud scale per-batch delta upload instead of full snapshot
-    * shipping is the documented reason the option exists.
+    * CHANGELOG checkpointing is ON for the scope (r18, measured): with the
+    * r17/r18 fixed costs removed (per-file fork tails, per-run codegen
+    * recompiles) the per-commit full-snapshot upload became visible —
+    * every commit created and `rm -rf`-ed a local checkpoint dir per store
+    * (~360 forked deletes per two-row run traced via PATH wrappers) — and
+    * the changelog form now wins ~8-15% on the v2 rows in interleaved A/B
+    * (4.52/4.68 s vs 4.90/5.53 s on q181+q203+q204+q207) where the r14
+    * measurement (SCALE.md §v2-premium) found it wall-neutral under the
+    * old fixed costs. The r14 100× tail already showed changelog
+    * neutral-to-better at depth (72.1 vs 72.6 s), so the flip carries no
+    * known deep-scale inversion; at cloud scale per-batch delta upload
+    * instead of full snapshot shipping is the documented reason the option
+    * exists. A checkpoint written in snapshot form resumes under changelog
+    * (AsofStreamV2Spec's restore tests cover both directions).
     */
-  private def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val clogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevP = s.conf.getOption(providerKey)
-    val prevC = s.conf.getOption(clogKey)
-    def restore(k: String, prev: Option[String]): Unit = prev match {
-      case Some(v) => s.conf.set(k, v)
-      case None    => s.conf.unset(k)
-    }
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set(clogKey,
-      (sys.env.get("GRAFT_ROCKSDB_CHANGELOG") match {
-        case Some(v) => v == "1"
-        case None    => true
-      }).toString)
-    try body
-    finally { restore(providerKey, prevP); restore(clogKey, prevC) }
-  }
+  private def withRocksDb[T](s: SparkSession)(body: => T): T =
+    graft.GraftSession.withConfs(s,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> Some("true"))(body)
 
   // ---- Named session-memoized input builders — one per streaming family.
   // Each returns the memo root; [[prebuildMemos]] runs them all so the
@@ -1930,8 +1893,8 @@ object StreamQueries {
     * must open BEFORE the query starts: `recentProgress` is a ring buffer
     * capped by `spark.sql.streaming.numRecentProgressUpdates` (default
     * 100), so long 100x chains would silently drop their earliest
-    * micro-batches at the default. Scoped save/restore (the
-    * [[withStatePartitions]] pattern) so the raised cap never leaks into
+    * micro-batches at the default. Scoped save/restore
+    * ([[graft.GraftSession.withConfs]]) so the raised cap never leaks into
     * the shared session past the run.
     */
   private def dumpProgress(q: StreamingQuery, tag: String): Unit =
@@ -1940,13 +1903,8 @@ object StreamQueries {
 
   private def withProgressTap[T](s: SparkSession)(body: => T): T =
     if (!sys.env.get("GRAFT_STREAM_PROGRESS").contains("1")) body
-    else {
-      val key  = "spark.sql.streaming.numRecentProgressUpdates"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "100000")
-      try body
-      finally prev match { case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key) }
-    }
+    else graft.GraftSession.withConfs(s,
+      "spark.sql.streaming.numRecentProgressUpdates" -> Some("100000"))(body)
 
   /** Read a per-batch foreachBatch sink back. A healthy two-drain run
     * ALWAYS commits at least one batch (the sentinel file alone forces

@@ -29,9 +29,7 @@ import org.apache.hadoop.fs.LocalFileSystem
   * checksum directions off, so data bytes and rename atomicity are
   * untouched.
   *
-  * Wired via `spark.hadoop.fs.file.impl` in the measured entry points
-  * (Bench/Verify); `GRAFT_LOCAL_FS_CRC=1` keeps the stock checksummed
-  * local fs.
+  * Wired via `spark.hadoop.fs.file.impl` by `graft.GraftSession`.
   */
 class NoCrcLocalFileSystem extends LocalFileSystem(new NoForkRawLocalFileSystem) {
   override def initialize(uri: URI, conf: Configuration): Unit = {

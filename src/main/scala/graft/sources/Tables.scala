@@ -27,10 +27,10 @@ object Tables {
     * so oracle results agree either way.
     *
     * For nanos-era files the legacy conf is a SESSION setting the caller
-    * must own (set it in the `SparkSession.builder`, as `Verify`/`Bench`/
-    * the test harness do): it is consulted again at execution time when the
-    * scan builds its readers, so a set-and-restore around this call would
-    * still break the query later. Micros-era files need no conf at all.
+    * must own (`graft.GraftSession` sets it on every session it builds):
+    * it is consulted again at execution time when the scan builds its
+    * readers, so a set-and-restore around this call would still break the
+    * query later. Micros-era files need no conf at all.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = load(spark, sfDir, "events")

@@ -258,14 +258,8 @@ object CurationStream {
     * batch cache is materialized by [[pinBatch]] BEFORE the scope opens,
     * and the conf is restored in `finally` before the next batch plans.
     */
-  private def sinkReduced(batch: DataFrame)(body: => Unit): Unit = {
-    val s     = batch.sparkSession
-    val key   = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    s.conf.set(key, "1")
-    try body
-    finally s.conf.set(key, saved)
-  }
+  private def sinkReduced(batch: DataFrame)(body: => Unit): Unit =
+    graft.GraftSession.withConfs(batch.sparkSession, "spark.sql.shuffle.partitions" -> Some("1"))(body)
 
   /** Batch KS reduction over closed window summaries: `counts` is
     * (window_start, source, v, cs); returns per (window_start, source) the

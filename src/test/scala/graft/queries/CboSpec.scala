@@ -19,16 +19,6 @@ class CboSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   /** Each test builds (and tears down) its own analyzed tables, so the
     * suite has no inter-test order dependency and a failed run cannot
     * leave stale tables whose stats poison the next run.
@@ -46,7 +36,7 @@ class CboSpec extends AnyFunSuite with SparkSpec {
 
   test("ANALYZE statistics surface exact row counts to the optimizer") {
     withAnalyzedTables {
-      withConf("spark.sql.cbo.enabled" -> "true") {
+      withConfs("spark.sql.cbo.enabled" -> Some("true")) {
         val expected = Tables.lineitem(spark, dir).count()
         val stats    = spark.table("cbo_li").queryExecution.optimizedPlan.stats
         assert(stats.rowCount.contains(BigInt(expected)),
@@ -75,12 +65,12 @@ class CboSpec extends AnyFunSuite with SparkSpec {
       Set("cbo_li", "cbo_ord", "cbo_cust").filter(t => innermost.toString.contains(t))
     }
 
-    val without = withConf(
-      "spark.sql.cbo.enabled" -> "false",
-      "spark.sql.cbo.joinReorder.enabled" -> "false")(deepestJoinTables)
-    val withCbo = withConf(
-      "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true")(deepestJoinTables)
+    val without = withConfs(
+      "spark.sql.cbo.enabled" -> Some("false"),
+      "spark.sql.cbo.joinReorder.enabled" -> Some("false"))(deepestJoinTables)
+    val withCbo = withConfs(
+      "spark.sql.cbo.enabled" -> Some("true"),
+      "spark.sql.cbo.joinReorder.enabled" -> Some("true"))(deepestJoinTables)
 
     assert(without == Set("cbo_li", "cbo_ord"),
       s"syntactic order should join the two facts first, got $without")
@@ -88,9 +78,9 @@ class CboSpec extends AnyFunSuite with SparkSpec {
       s"CBO should pull the tiny filtered dim into the first join, got $withCbo")
 
     // and reordering never changes results
-    val r1 = withConf("spark.sql.cbo.enabled" -> "false", "spark.sql.cbo.joinReorder.enabled" -> "false")(
+    val r1 = withConfs("spark.sql.cbo.enabled" -> Some("false"), "spark.sql.cbo.joinReorder.enabled" -> Some("false"))(
       query.orderBy(col("c_custkey")).collect().toSeq)
-    val r2 = withConf("spark.sql.cbo.enabled" -> "true", "spark.sql.cbo.joinReorder.enabled" -> "true")(
+    val r2 = withConfs("spark.sql.cbo.enabled" -> Some("true"), "spark.sql.cbo.joinReorder.enabled" -> Some("true"))(
       query.orderBy(col("c_custkey")).collect().toSeq)
     assert(r1 == r2)
     }

@@ -15,17 +15,14 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   test("AQE splits a skewed sort-merge join at runtime (skew=true in the final plan)") {
-    val confs = Seq(
-      "spark.sql.autoBroadcastJoinThreshold"                        -> "-1", // force SMJ
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor"           -> "1.0",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes"             -> "16KB",
+    withConfs(
+      "spark.sql.autoBroadcastJoinThreshold"                        -> Some("-1"), // force SMJ
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor"           -> Some("1.0"),
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> Some("16KB"),
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes"             -> Some("16KB"),
       // keep AQE from first coalescing tiny partitions into one
-      "spark.sql.adaptive.coalescePartitions.enabled"               -> "false"
-    )
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.coalescePartitions.enabled"               -> Some("false")
+    ) {
       // 200k rows on ONE key vs a trickle on others: the hot partition is
       // orders of magnitude over the (lowered) threshold
       val fact = spark
@@ -43,9 +40,6 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec {
       val finalPlan = adaptive.map(_.executedPlan.toString).getOrElse(joined.queryExecution.executedPlan.toString)
       assert(finalPlan.contains("SortMergeJoin"), "setup failed — join was not an SMJ:\n" + finalPlan.take(600))
       assert(finalPlan.contains("skew=true"), "AQE did not split the hot key:\n" + finalPlan.take(1200))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 }

@@ -25,16 +25,6 @@ import java.nio.file.Files
 class RuntimeFilterSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("join against a filtered dim dynamically prunes fact partitions (DPP)") {
     val tmp = Files.createTempDirectory("graft-dpp").toString
     Sinks.writePartitioned(
@@ -50,7 +40,7 @@ class RuntimeFilterSpec extends AnyFunSuite with SparkSpec {
       .toDF("status", "label")
       .write.mode("overwrite").parquet(s"$tmp/dim")
     val dim = spark.read.parquet(s"$tmp/dim")
-    withConf("spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "true") {
+    withConfs("spark.sql.optimizer.dynamicPartitionPruning.enabled" -> Some("true")) {
       val j = fact
         .join(dim.filter($"label" === "final"), fact("o_orderstatus") === dim("status"))
       val plan = j.queryExecution.executedPlan.toString
@@ -66,11 +56,11 @@ class RuntimeFilterSpec extends AnyFunSuite with SparkSpec {
   test("selective shuffle join injects a runtime bloom filter on the probe side") {
     // Thresholds sized for harness data: at defaults the application side
     // must exceed 10GB — the CONDITION scales, the mechanism is identical.
-    withConf(
-      "spark.sql.autoBroadcastJoinThreshold"                                  -> "-1",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled"                       -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold"         -> "100MB"
+    withConfs(
+      "spark.sql.autoBroadcastJoinThreshold"                                  -> Some("-1"),
+      "spark.sql.optimizer.runtime.bloomFilter.enabled"                       -> Some("true"),
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> Some("0"),
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold"         -> Some("100MB")
     ) {
       val li  = Tables.lineitem(spark, "/root/testdata/sf0.001")
       val ord = Tables.orders(spark, "/root/testdata/sf0.001")

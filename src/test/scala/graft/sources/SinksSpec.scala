@@ -41,10 +41,8 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
 
     // disable auto-broadcast so the join exercises the bucketed layout
     // (at real scale neither side broadcasts — that is the point)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val joined =
-      try {
+      withConfs("spark.sql.autoBroadcastJoinThreshold" -> Some("-1")) {
         val j = Sinks
           .readTable(spark, "orders_b")
           .join(Sinks.readTable(spark, "lineitem_b"), "o_orderkey")
@@ -52,7 +50,7 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
         assert(plan.contains("SortMergeJoin"), plan.take(600))
         assert(!plan.contains("Exchange"), "bucketed join must not shuffle:\n" + plan.take(800))
         j
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      }
 
     // and the join is still correct
     val expected = orders

@@ -37,17 +37,6 @@ class AsofStreamV2Spec extends AnyFunSuite with SparkSpec {
     if (m == 1L) AsofRow(eid, uid, tus, qus, qeid, Some(cents), 1L)
     else AsofRow(eid, uid, tus, 0L, 0L, None, 0L)
 
-  private def withRocksDb[A](body: => A): A = {
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** MemoryStream run of a joined-family operator (RocksDB pinned by the
     * caller for v2 variants).
     */
@@ -208,7 +197,12 @@ class AsofStreamV2Spec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("restore: the compacted anchor AND a pending trade survive a RocksDB checkpoint stop/restart") {
+  /** The compacted-anchor stop/restart with run 1 and run 2 under the given
+    * RocksDB changelog-checkpointing settings (`None`: Spark's default, off).
+    * The board's stream scope turns changelog on, so a checkpoint written
+    * in snapshot form must resume under changelog and the reverse.
+    */
+  private def anchorRestore(clog1: Option[String], clog2: Option[String]): Unit =
     withRocksDb {
       val tmp   = Files.createTempDirectory("graft-asofv2-restore")
       graft.sources.SessionMemo.deleteOnExit(tmp)
@@ -252,8 +246,15 @@ class AsofStreamV2Spec extends AnyFunSuite with SparkSpec {
         ev(4L, T0 + 10L * H, "q", 20L, 800L),
         ev(4L, T0 + 600L * H, "t", 400L), // pending: wm only reaches 500h
         ev(-1L, T0 + 500L * H, "__sentinel__", -1L)))
-      val run1 = drain()
+      // the checkpoint form each run wrote: changelog files only when on
+      def stateFiles(suffix: String): Int = {
+        val walk = Files.walk(java.nio.file.Paths.get(s"$tmp/ckpt/state"))
+        try walk.filter(_.toString.endsWith(suffix)).count().toInt finally walk.close()
+      }
+      val run1 = withConfs(ClogKey -> clog1)(drain())
       assert(run1.isEmpty, s"run 1 must emit nothing (trade still pending): $run1")
+      val (logs1, zips1) = (stateFiles(".changelog"), stateFiles(".zip"))
+      assert((logs1 > 0) == clog1.contains("true"), s"run 1 wrote $logs1 changelog files under $clog1")
 
       // EPOCH 2: a much-later trade for key 2 (only the RESTORED anchor
       // can serve it — the quote that wins arrived 1000 h earlier and was
@@ -264,12 +265,27 @@ class AsofStreamV2Spec extends AnyFunSuite with SparkSpec {
         ev(2L, T0 + 1000L * H, "t", 200L),
         ev(2L, T0 + 1001L * H, "q", 11L, 900L), // after the trade: must not serve it
         ev(-1L, T0 + 1100L * H, "__sentinel__", -1L)))
-      val run2 = drain()
+      val run2 = withConfs(ClogKey -> clog2)(drain())
+      if (clog2.contains("true")) assert(stateFiles(".changelog") > logs1, "run 2 wrote no changelog files")
+      else assert(stateFiles(".zip") > zips1, "run 2 wrote no snapshot files")
       assert(run2 == Seq(
         row(200L, 2L, T0 + 1000L * H, T0, 10L, 700L, 1L),
         row(400L, 4L, T0 + 600L * H, T0 + 10L * H, 20L, 800L, 1L)),
         s"restored state must serve both the anchor match and the pending trade: $run2")
     }
+
+  private val ClogKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  test("restore: the compacted anchor AND a pending trade survive a RocksDB checkpoint stop/restart") {
+    anchorRestore(None, None)
+  }
+
+  test("restore: the compacted anchor AND a pending trade survive a stop/restart from snapshot to changelog checkpoints") {
+    anchorRestore(Some("false"), Some("true"))
+  }
+
+  test("restore: the compacted anchor AND a pending trade survive a stop/restart from changelog to snapshot checkpoints") {
+    anchorRestore(Some("true"), Some("false"))
   }
 
   test("v2 tolerance: out-of-window trades emit matched=0; a stale anchor expires to ZERO state via its own timer") {

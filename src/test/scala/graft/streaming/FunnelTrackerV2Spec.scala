@@ -31,17 +31,6 @@ class FunnelTrackerV2Spec extends AnyFunSuite with SparkSpec {
     FunnelEvent(ts, us, uid, etype)
   }
 
-  private def withRocksDb[A](body: => A): A = {
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** MemoryStream run of either tracker (RocksDB pinned by the caller for
     * v2). Rows come back sorted for order-free comparison.
     */

@@ -228,17 +228,6 @@ class HotKeyStressSpec extends AnyFunSuite with SparkSpec {
       (System.nanoTime() - t0) / 1000000L)
   }
 
-  private def withRocksDb[A](body: => A): A = {
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   test("v1 and v2 agree on the hot fixture") {
     val n = 2000
     val (_, expected) = hotFixture(n)

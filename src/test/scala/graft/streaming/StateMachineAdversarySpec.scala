@@ -122,17 +122,6 @@ class StateMachineAdversarySpec extends AnyFunSuite with SparkSpec {
   private def earlier(a: (Long, Long), b: (Long, Long)): (Long, Long) =
     if (a._1 < b._1 || (a._1 == b._1 && a._2 <= b._2)) a else b
 
-  private def withRocksDb[A](body: => A): A = {
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   private def sortRows(rs: Seq[AsofRow[Long, Long]]): Seq[AsofRow[Long, Long]] =
     rs.sortBy(r => (r.key, r.t_us, r.event_id))
 

@@ -22,17 +22,6 @@ class StateV2BalancesSpec extends AnyFunSuite with SparkSpec {
   private def tp(sec: Long, id: String, amount: Long, from: String) =
     StatefulBalances.TimedPayment(new java.sql.Timestamp(sec * 1000L), p(id, amount, from))
 
-  private def withRocksDb[A](body: => A): A = {
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   test("v2 TTL: keys idle past the watermark TTL are evicted and re-initialize from zero") {
     withRocksDb {
       implicit val sqlCtx = spark.sqlContext

@@ -41,12 +41,7 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
     // HDFS-backed store. Same query, same results — only the provider conf
     // changes (this is the config a 100 TB deployment sets).
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    try {
+    withRocksDb {
       val input = MemoryStream[PaymentEvent]
       val tmp   = Files.createTempDirectory("graft-rocks").toString
       val query = graft.operators.PaymentOps
@@ -74,11 +69,6 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
       val metrics = query.lastProgress.stateOperators.flatMap(_.customMetrics.keySet.asScala)
       assert(metrics.exists(_.toLowerCase.contains("rocksdb")), metrics.mkString(", "))
       query.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -159,12 +149,7 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
 
   test("runningBalancesTtl on RocksDB sustains a large key space (TTL bounds live state)") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    try {
+    withRocksDb {
       val input = MemoryStream[StatefulBalances.TimedPayment]
       val tmp   = Files.createTempDirectory("graft-ttl-rocks").toString
       val query = StatefulBalances
@@ -192,11 +177,6 @@ class StatefulBalancesSpec extends AnyFunSuite with SparkSpec {
       val rocks = query.lastProgress.stateOperators.flatMap(_.customMetrics.keySet.asScala)
       assert(rocks.exists(_.toLowerCase.contains("rocksdb")))
       query.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev-only profiler (test scope, never on the board): runs the named
@@ -15,15 +14,7 @@ object StreamProfileMain {
   def main(args: Array[String]): Unit = {
     val dir  = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val want = (if (args.length > 1) args(1) else "q171").split(",").map(_.trim).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
