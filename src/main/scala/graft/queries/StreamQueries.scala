@@ -2,9 +2,9 @@ package graft.queries
 
 import graft.sources.Tables
 import graft.streaming.CurationStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Streaming queries whose SINK OUTPUT is registered on the correctness
   * board — the streaming operators are spec-proven with batch twins
@@ -136,29 +136,6 @@ object StreamQueries {
 
   private def withStatePartitions[T](s: SparkSession)(body: => T): T =
     graft.GraftSession.withConfs(s, StreamScopeConfs: _*)(body)
-
-  /** Pin the RocksDB state-store provider (required by the state API v2
-    * rows) for the scope of `body`, restoring the session conf after.
-    * CHANGELOG checkpointing is ON for the scope (r18, measured): with the
-    * r17/r18 fixed costs removed (per-file fork tails, per-run codegen
-    * recompiles) the per-commit full-snapshot upload became visible —
-    * every commit created and `rm -rf`-ed a local checkpoint dir per store
-    * (~360 forked deletes per two-row run traced via PATH wrappers) — and
-    * the changelog form now wins ~8-15% on the v2 rows in interleaved A/B
-    * (4.52/4.68 s vs 4.90/5.53 s on q181+q203+q204+q207) where the r14
-    * measurement (SCALE.md §v2-premium) found it wall-neutral under the
-    * old fixed costs. The r14 100× tail already showed changelog
-    * neutral-to-better at depth (72.1 vs 72.6 s), so the flip carries no
-    * known deep-scale inversion; at cloud scale per-batch delta upload
-    * instead of full snapshot shipping is the documented reason the option
-    * exists. A checkpoint written in snapshot form resumes under changelog
-    * (AsofStreamV2Spec's restore tests cover both directions).
-    */
-  private def withRocksDb[T](s: SparkSession)(body: => T): T =
-    graft.GraftSession.withConfs(s,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> Some("true"))(body)
 
   // ---- Named session-memoized input builders — one per streaming family.
   // Each returns the memo root; [[prebuildMemos]] runs them all so the
@@ -550,6 +527,36 @@ object StreamQueries {
           java.nio.file.Files.copy(f, t); ()
       }
     }
+
+  /** Two `Trigger.AvailableNow` runs of one query over ONE checkpoint —
+    * the q188/q193/q196/q194/q198 execution shape: hardlink the `run1`
+    * (source dir, name prefix) files into a fresh watch dir under `tmp`,
+    * drain, link the `run2` files, drain again, all inside the
+    * bounded-stream conf scope. `writer(watch)` builds the query over the
+    * watch dir up to its sink; each drain adds the checkpoint and the
+    * trigger, starts it, and waits for it to stop itself. Run 2 restores
+    * run 1's state, watermark and source file log from the checkpoint.
+    */
+  private def twoEpochRun(
+      s: SparkSession, tmp: String, run1: Seq[(String, String)], run2: Seq[(String, String)])(
+      writer: String => DataStreamWriter[Row]): Unit = {
+    val watch = s"$tmp/watch"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
+    def drain(): Unit = {
+      val q = writer(watch)
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() // AvailableNow stops the query itself
+      finally q.stop()
+    }
+    withStatePartitions(s) {
+      run1.foreach { case (src, prefix) => linkDataFiles(src, watch, prefix) }
+      drain()
+      run2.foreach { case (src, prefix) => linkDataFiles(src, watch, prefix) }
+      drain()
+    }
+  }
 
   /** Pre-materialize every streaming family's session-memoized input for
     * `dir` — the Bench steady-state protocol's `stream` family: without
@@ -1143,20 +1150,20 @@ object StreamQueries {
       }).orderBy(col("window_start"), col("event_type"))
     }),
 
-    // The STATE API v2 path (`transformWithState` + RocksDB provider +
-    // per-key TIMERS) under the byte gate: StateV2Balances' TTL'd
+    // TTL'd running balances (flatMapGroupsWithState + event-time
+    // timeouts) under the byte gate: StatefulBalances.runningBalancesTtl's
     // update-mode running sums over per-user cents, changelog appended
     // with the batch id, snapshot = latest committed emission per key (the
     // q174 BalanceStore reconstruction, inline). The TTL (60 d) exceeds
     // the corpus event-time span, so no eviction can reset a key mid-run —
-    // the snapshot must equal the grouped sum exactly. v1/v2 timer parity
-    // is spec-proven (StateV2BalancesSpec mirrors StatefulBalancesSpec);
-    // this row proves the v2 runtime's BYTES.
-    "q181_state_v2_stream" -> ((s, dir) => {
+    // the snapshot must equal the grouped sum exactly. The eviction path
+    // itself is spec-proven (StatefulBalancesSpec); this row proves the
+    // TTL operator's BYTES.
+    "q181_state_ttl_stream" -> ((s, dir) => {
       import s.implicits._
       val in = s"${sessInput(s, dir)}/in"
       val log =
-        withRocksDb(s)(withStatePartitions(s)(runSinked(s, "twsbal") { (ckpt, sink) =>
+        withStatePartitions(s)(runSinked(s, "ttlbal") { (ckpt, sink) =>
           val timed = streamFrom(s, in)
             .filter(col("user_id") >= 0) // the watermark sentinel is not a payer
             .select(
@@ -1169,7 +1176,7 @@ object StreamQueries {
                 col("user_id").cast("string").as("fromAccount"),
                 lit("BANK_RAILS_FOO").as("rails")).as("payment"))
             .as[graft.streaming.StatefulBalances.TimedPayment]
-          graft.streaming.StateV2Balances
+          graft.streaming.StatefulBalances
             .runningBalancesTtl(timed, java.time.Duration.ofDays(60))
             .toDF()
             .writeStream
@@ -1180,7 +1187,7 @@ object StreamQueries {
               ()
             }
             .start()
-        }))
+        })
       val latest = org.apache.spark.sql.expressions.Window
         .partitionBy(col("fromAccount"))
         .orderBy(col("batch_id").desc)
@@ -1310,35 +1317,24 @@ object StreamQueries {
     // watermark, or the source's file log is wrong. Same transform and
     // oracle as q172: the proof here is the two-run execution shape.
     "q188_available_now_incremental" -> ((s, dir) => {
-      val root  = incrInput(s, dir)
-      val tmp   = freshTmp("incr")
-      val watch = s"$tmp/watch"
-      val outP  = s"$tmp/out"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
-      def drain(): Unit = {
-        val q = eventWindowCents(
+      val root = incrInput(s, dir)
+      val tmp  = freshTmp("incr")
+      val outP = s"$tmp/out"
+      twoEpochRun(s, tmp,
+        run1 = Seq(s"$root/in" -> "run1"), // run 1: early epoch → pre-boundary windows emit
+        // run 2: late epoch + sentinel → open + remaining windows emit
+        run2 = Seq(s"$root/in2" -> "run2", s"$root/sent" -> "sent")) { watch =>
+        eventWindowCents(
           s.readStream
             .schema(s.read.parquet(s"$root/sent").schema) // sent always has a file
             .parquet(watch)
             .withWatermark("ts", "0 seconds"))
           .writeStream
           .outputMode("append")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(outP)
             ()
           }
-          .start()
-        try q.awaitTermination() // AvailableNow stops the query itself
-        finally q.stop()
-      }
-      withStatePartitions(s) {
-        linkDataFiles(s"$root/in", watch, "run1")
-        drain() // run 1: early epoch → pre-boundary windows emit
-        linkDataFiles(s"$root/in2", watch, "run2")
-        linkDataFiles(s"$root/sent", watch, "sent")
-        drain() // run 2: late epoch + sentinel → open + remaining windows emit
       }
       s.read.parquet(outP)
         .select(
@@ -1385,16 +1381,14 @@ object StreamQueries {
     "q193_scd2_incremental" -> ((s, dir) => {
       val root  = scdInput(s, dir)
       val tmp   = freshTmp("scdinc")
-      val watch = s"$tmp/watch"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
       val store = new graft.streaming.ScdStore(s, s"$tmp/store", EventQueries.ScdOpenEnd)
-      def drain(): Unit = {
-        val q = s.readStream
+      twoEpochRun(s, tmp,
+        run1 = Seq(s"$root/in" -> "run1"),   // run 1: early epoch → versions build, last per user open
+        run2 = Seq(s"$root/in2" -> "run2")) { watch => // run 2: late epoch → opens close, new versions append
+        s.readStream
           .schema(s.read.parquet(s"$root/in").schema)
           .parquet(watch) // no maxFilesPerTrigger: each run is ONE batch
           .writeStream
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, id: Long) =>
             // persist: merge evaluates the micro-batch twice (the bucket
             // listing's collect + the changelog write) — one source read,
@@ -1404,15 +1398,6 @@ object StreamQueries {
             finally { batch.unpersist(); () }
             ()
           }
-          .start()
-        try q.awaitTermination() // AvailableNow stops the query itself
-        finally q.stop()
-      }
-      withStatePartitions(s) {
-        linkDataFiles(s"$root/in", watch, "run1")
-        drain() // run 1: early epoch → versions build, last per user open
-        linkDataFiles(s"$root/in2", watch, "run2")
-        drain() // run 2: late epoch → opens close, new versions append
       }
       store.snapshotDf.orderBy(col("user_id"), col("version"))
     }),
@@ -1434,17 +1419,13 @@ object StreamQueries {
     "q196_cdc_pit_stream" -> ((s, dir) => {
       val root  = scdInput(s, dir)
       val tmp   = freshTmp("cdcpit")
-      val watch = s"$tmp/watch"
       val outP  = s"$tmp/out"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
       val store = new graft.streaming.ScdStore(s, s"$tmp/store", EventQueries.ScdOpenEnd)
-      def drain(): Unit = {
-        val q = s.readStream
+      twoEpochRun(s, tmp, run1 = Seq(s"$root/in" -> "run1"), run2 = Seq(s"$root/in2" -> "run2")) { watch =>
+        s.readStream
           .schema(s.read.parquet(s"$root/in").schema)
           .parquet(watch)
           .writeStream
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, id: Long) =>
             // The micro-batch feeds FOUR consumers (bucket listing, merge
             // write, enrich probe, enrich write) — persist it and compute
@@ -1466,15 +1447,6 @@ object StreamQueries {
             } finally { batch.unpersist(); () }
             ()
           }
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
-      }
-      withStatePartitions(s) {
-        linkDataFiles(s"$root/in", watch, "run1")
-        drain()
-        linkDataFiles(s"$root/in2", watch, "run2")
-        drain()
       }
       readBatches(s, outP)
         .select(col("event_id"), col("user_id"), col("version"), col("cents_asof"))
@@ -1514,26 +1486,6 @@ object StreamQueries {
     // passes close + TTL, instead of one tombstone per entrant forever.
     "q199_funnel_ttl_stream" -> ((s, dir) =>
       funnelStreamRun(s, dir, "funnelttl", spanTtl = true)),
-
-    // THE STREAMING FUNNEL ON STATE API v2 — q194's exact pipeline with
-    // the ordered-pattern state on `transformWithState` + RocksDB +
-    // explicit timers (streaming/FunnelTrackerV2, shared v1 kernel:
-    // granular ListState candidate buffers with the one-appendList-per-
-    // trigger batching rule, ValueState t1/tombstone, resolution only on
-    // handleExpiredTimer). Byte-gated against q191's EXACT oracle across
-    // the two-epoch checkpoint split — with q203–q206 this proves EVERY
-    // custom-state family the engine owns on both state APIs.
-    "q207_funnel_v2" -> ((s, dir) => funnelStreamRun(s, dir, "funnelv2", api = "v2")),
-
-    // THE ENTRANT-TTL FLAVOR ON STATE API v2 — q199's corpus-span
-    // tombstone TTL on transformWithState: the v2 timer machinery
-    // carries the tombstone's own event-time expiry (state → ZERO past
-    // close + TTL, RocksDB edition; FunnelTrackerV2Spec proves the
-    // expiry/re-entry path on crafted deliveries). Byte-gated against
-    // q191's oracle — the TTL contract ("in-TTL results unchanged") on
-    // the v2 store.
-    "q208_funnel_ttl_v2" -> ((s, dir) =>
-      funnelStreamRun(s, dir, "funnelttlv2", spanTtl = true, api = "v2")),
 
     // STREAM-STREAM AS-OF JOIN — the missing as-of flavor: the batch
     // family (q80–q114) covers 3 directions × inner/outer × tolerance and
@@ -1583,58 +1535,7 @@ object StreamQueries {
     // the watermark clears its FORWARD half-window; the quote buffer is
     // bounded to the ±tolerance span around the floor, no anchor.
     "q202_asof_nearest_stream" -> ((s, dir) =>
-      asofStreamRun(s, dir, "asofnear", AsofToleranceHours * 3600L * 1000000L, mode = "nearest")),
-
-    // THE STATE-API-V2 STREAM-STREAM AS-OF — q198's backward-unbounded
-    // join re-run on `transformWithState` + RocksDB provider + per-key
-    // timers (streaming/AsofStreamV2), byte-gated against q198's EXACT
-    // oracle over the same two-epoch checkpoint split: the q178/q179
-    // (and q174/q181) cross-proof pattern applied to the engine's newest
-    // custom-state family. The kernel (argmax, anchor compaction, floor
-    // pruning) is shared code; what this row proves is the v2 MACHINERY —
-    // granular ListState buffers (per-arrival merge appends instead of
-    // v1's whole-blob rewrite; burst caveat measured in HotKeyStressSpec),
-    // explicit registerTimer/handleExpiredTimer resolution, and the
-    // anchor surviving a RocksDB checkpoint restore — lands the identical
-    // bytes.
-    "q203_asof_stream_v2" -> ((s, dir) =>
-      asofStreamRun(s, dir, "asofv2", Long.MaxValue, api = "v2")),
-
-    // THE TOLERANCE FLAVOR ON STATE API v2 — q200's 48 h bounded-lookback
-    // join on transformWithState: same shared kernel, but the v2 timer
-    // machinery now has to carry the ANCHOR-EXPIRY deadline too (a
-    // quote-only key's anchor retires via its own registered timer once
-    // every reachable window has passed — the zero-steady-state bound,
-    // RocksDB edition). Byte-gated against q200's exact oracle; with
-    // q203 this cross-proves BOTH ends of the backward family's state
-    // spectrum (irreducible one-anchor vs fully-expiring) on both APIs.
-    "q204_asof_tolerance_v2" -> ((s, dir) =>
-      asofStreamRun(s, dir, "asoftolv2", AsofToleranceHours * 3600L * 1000000L, api = "v2")),
-
-    // THE FORWARD FLAVOR ON STATE API v2 — q201's earliest-at-or-after
-    // join on transformWithState (the mode-parameterized AsofProcessor,
-    // same shared v1 kernel as q203/q204): the v2 machinery now carries
-    // the forward discipline's two distinctives — NO anchor ever forms
-    // (pruneForward's proof: a quote behind the floor precedes every
-    // reachable trade), and a trade's finality timer sits at its
-    // look-AHEAD window END (t + tol), not its own instant. Byte-gated
-    // against q201's EXACT oracle across the two-epoch checkpoint split
-    // (the far sentinel `/sentf` closes the windows in run 2).
-    "q205_asof_forward_v2" -> ((s, dir) =>
-      asofStreamRun(s, dir, "asoffwdv2",
-        AsofToleranceHours * 3600L * 1000000L, mode = "forward", api = "v2")),
-
-    // THE NEAREST FLAVOR ON STATE API v2 — q202's least-|Δ| join on
-    // transformWithState: the ±tolerance two-sided buffer (quotes retire
-    // at q.us + tol — only then is no reachable trade's window able to
-    // cover them) and the batch merge node's exact tie chain, on RocksDB
-    // granular state + explicit timers. Byte-gated against q202's EXACT
-    // oracle; with q203–q205 this completes the 3-direction × 2-API
-    // matrix — every streaming as-of flavor is now cross-proven on both
-    // state APIs against one independent SQL formulation per direction.
-    "q206_asof_nearest_v2" -> ((s, dir) =>
-      asofStreamRun(s, dir, "asofnearv2",
-        AsofToleranceHours * 3600L * 1000000L, mode = "nearest", api = "v2"))
+      asofStreamRun(s, dir, "asofnear", AsofToleranceHours * 3600L * 1000000L, mode = "nearest"))
   )
 
   /** 48 h — wide enough that most trades match (the shipped corpora sit
@@ -1643,23 +1544,15 @@ object StreamQueries {
     */
   private val AsofToleranceHours = 48L
 
-  /** The q198/q200 shared execution: the union-tagged quotes/trades feed
-    * through [[graft.streaming.AsofStreamJoin.joined]] as TWO
-    * Trigger.AvailableNow runs over ONE checkpoint (the q188/q194
-    * shape), idempotent per-batch-partition sink, matched=0 sentinel
-    * fields surfaced as SQL NULLs.
-    */
-  /** The q194/q199/q207/q208 shared execution: the filtered funnel events
-    * feed through [[graft.streaming.FunnelTracker]] (v1) or
-    * [[graft.streaming.FunnelTrackerV2]] (state API v2 + RocksDB) as TWO
-    * Trigger.AvailableNow runs over ONE checkpoint (the q188 ingest
-    * shape), idempotent per-batch-partition sink; `spanTtl` arms the
-    * tombstone TTL at the corpus span (data-derived, one cheap events agg
-    * — never a wall-clock literal).
+  /** The q194/q199 shared execution: the filtered funnel events feed
+    * through [[graft.streaming.FunnelTracker]] as TWO Trigger.AvailableNow
+    * runs over ONE checkpoint ([[twoEpochRun]]), idempotent
+    * per-batch-partition sink; `spanTtl` arms the tombstone TTL at the
+    * corpus span (data-derived, one cheap events agg — never a wall-clock
+    * literal).
     */
   private def funnelStreamRun(
-      s: SparkSession, dir: String, tag: String,
-      spanTtl: Boolean = false, api: String = "v1"): DataFrame = {
+      s: SparkSession, dir: String, tag: String, spanTtl: Boolean = false): DataFrame = {
     import s.implicits._
     val ttlUs =
       if (spanTtl)
@@ -1667,12 +1560,13 @@ object StreamQueries {
           .agg((max(unix_micros(col("ts"))) - min(unix_micros(col("ts")))).as("span"))
           .head().getLong(0)
       else Long.MaxValue
-    val root  = funnelInput(s, dir)
-    val tmp   = freshTmp(tag)
-    val watch = s"$tmp/watch"
-    val outP  = s"$tmp/out"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
-    def drain(): Unit = {
+    val root = funnelInput(s, dir)
+    val tmp  = freshTmp(tag)
+    val outP = s"$tmp/out"
+    twoEpochRun(s, tmp,
+      run1 = Seq(s"$root/in" -> "run1"), // run 1: early epoch → early entrants close and emit
+      // run 2: late epoch + sentinel → straddlers + the rest emit
+      run2 = Seq(s"$root/in2" -> "run2", s"$root/sent" -> "sent")) { watch =>
       val evs = s.readStream
         .schema(s.read.parquet(s"$root/sent").schema) // sent always has a file
         .parquet(watch)
@@ -1681,19 +1575,11 @@ object StreamQueries {
         .select(
           col("ts"), unix_micros(col("ts")).as("us"), col("user_id"), col("event_type"))
         .as[graft.streaming.FunnelTracker.FunnelEvent]
-      val tracked =
-        if (api == "v2")
-          graft.streaming.FunnelTrackerV2.funnels(
-            evs, EventQueries.FunnelStepUs, EventQueries.FunnelHorizonUs, ttlUs)
-        else
-          graft.streaming.FunnelTracker.funnels(
-            evs, EventQueries.FunnelStepUs, EventQueries.FunnelHorizonUs, ttlUs)
-      val q = tracked
+      graft.streaming.FunnelTracker
+        .funnels(evs, EventQueries.FunnelStepUs, EventQueries.FunnelHorizonUs, ttlUs)
         .toDF()
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
           // idempotent per-batch-partition overwrite (the q196/q182
           // recipe): a batch replayed after a crash-between-write-and-
@@ -1701,19 +1587,7 @@ object StreamQueries {
           batch.write.mode("overwrite").parquet(s"$outP/batch=$id")
           ()
         }
-        .start()
-      try q.awaitTermination() // AvailableNow stops the query itself
-      finally q.stop()
     }
-    def runAll(): Unit = withStatePartitions(s) {
-      linkDataFiles(s"$root/in", watch, "run1")
-      drain() // run 1: early epoch → early entrants close and emit
-      linkDataFiles(s"$root/in2", watch, "run2")
-      linkDataFiles(s"$root/sent", watch, "sent")
-      drain() // run 2: late epoch + sentinel → straddlers + the rest emit
-    }
-    // the v2 state API requires the RocksDB provider (q181's conf scope)
-    if (api == "v2") withRocksDb(s)(runAll()) else runAll()
     readBatches(s, outP).select(
       col("user_id"),
       timestamp_micros(col("t1_us")).as("t1"),
@@ -1724,16 +1598,26 @@ object StreamQueries {
       .orderBy(col("user_id"))
   }
 
+  /** The q198/q200/q201/q202 shared execution: the union-tagged
+    * quotes/trades feed through [[graft.streaming.AsofStreamJoin]]'s
+    * `mode` direction as TWO Trigger.AvailableNow runs over ONE checkpoint
+    * ([[twoEpochRun]]), idempotent per-batch-partition sink, matched=0
+    * sentinel fields surfaced as SQL NULLs.
+    */
   private def asofStreamRun(
       s: SparkSession, dir: String, tag: String, toleranceUs: Long,
-      mode: String = "backward", api: String = "v1"): DataFrame = {
+      mode: String = "backward"): DataFrame = {
     import s.implicits._
-    val root  = asofInput(s, dir)
-    val tmp   = freshTmp(tag)
-    val watch = s"$tmp/watch"
-    val outP  = s"$tmp/out"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
-    def drain(): Unit = {
+    val root = asofInput(s, dir)
+    val tmp  = freshTmp(tag)
+    val outP = s"$tmp/out"
+    twoEpochRun(s, tmp,
+      run1 = Seq(s"$root/in" -> "run1"), // run 1: early epoch — boundary trades stay PENDING state
+      // run 2: late epoch + sentinel — everything resolves; forward/nearest
+      // must clear max + tolerance (the far sentinel)
+      run2 = Seq(
+        s"$root/in2" -> "run2",
+        (if (mode == "backward") s"$root/sent" else s"$root/sentf") -> "sent")) { watch =>
       val evs = s.readStream
         .schema(s.read.parquet(s"$root/sent").schema)
         .parquet(watch)
@@ -1741,42 +1625,19 @@ object StreamQueries {
           col("ts"), unix_micros(col("ts")).as("us"), col("user_id").as("key"),
           col("side"), col("event_id"), col("cents").as("payload"))
         .as[graft.streaming.AsofStreamJoin.SideEvent[Long, Long]]
-      val joined = (api, mode) match {
-        case ("v2", "forward") => graft.streaming.AsofStreamV2.joinedForward(evs, toleranceUs)
-        case ("v2", "nearest") => graft.streaming.AsofStreamV2.joinedNearest(evs, toleranceUs)
-        case ("v2", _)        => graft.streaming.AsofStreamV2.joined(evs, toleranceUs)
-        case (_, "forward")   => graft.streaming.AsofStreamJoin.joinedForward(evs, toleranceUs)
-        case (_, "nearest")   => graft.streaming.AsofStreamJoin.joinedNearest(evs, toleranceUs)
-        case _                => graft.streaming.AsofStreamJoin.joined(evs, toleranceUs)
+      val joined = mode match {
+        case "forward" => graft.streaming.AsofStreamJoin.joinedForward(evs, toleranceUs)
+        case "nearest" => graft.streaming.AsofStreamJoin.joinedNearest(evs, toleranceUs)
+        case _         => graft.streaming.AsofStreamJoin.joined(evs, toleranceUs)
       }
-      val q = joined
+      joined
         .toDF()
         .writeStream
         .outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
           batch.write.mode("overwrite").parquet(s"$outP/batch=$id")
           ()
         }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-      dumpProgress(q, tag)
-    }
-    def runAll(): Unit = withStatePartitions(s) {
-      linkDataFiles(s"$root/in", watch, "run1")
-      drain() // run 1: early epoch — boundary trades stay PENDING state
-      linkDataFiles(s"$root/in2", watch, "run2")
-      // forward/nearest must clear max + tolerance (the far sentinel)
-      linkDataFiles(if (mode == "backward") s"$root/sent" else s"$root/sentf", watch, "sent")
-      drain() // run 2: late epoch + sentinel — everything resolves
-    }
-    // the v2 state API requires the RocksDB provider (q181's conf scope);
-    // the progress-tap scope spans both drains so dumpProgress sees the
-    // full ring buffer, and the conf is restored after the run
-    withProgressTap(s) {
-      if (api == "v2") withRocksDb(s)(runAll()) else runAll()
     }
     readBatches(s, outP).select(
       col("event_id"),
@@ -1883,28 +1744,6 @@ object StreamQueries {
     graft.sources.SessionMemo.deleteOnExit(tmp)
     tmp.toString
   }
-
-  /** Diagnostic tap (off by default): `GRAFT_STREAM_PROGRESS=1` dumps each
-    * finished micro-batch's StreamingQueryProgress JSON — durations, state
-    * operator rows, and the RocksDB custom metrics — to stderr, tagged for
-    * offline grep. The profiling lever the r14 verdict's q206 directive
-    * calls for ("is the cost the compaction rewrite or RocksDB
-    * scheduling?"): zero cost unless the env var is set. [[withProgressTap]]
-    * must open BEFORE the query starts: `recentProgress` is a ring buffer
-    * capped by `spark.sql.streaming.numRecentProgressUpdates` (default
-    * 100), so long 100x chains would silently drop their earliest
-    * micro-batches at the default. Scoped save/restore
-    * ([[graft.GraftSession.withConfs]]) so the raised cap never leaks into
-    * the shared session past the run.
-    */
-  private def dumpProgress(q: StreamingQuery, tag: String): Unit =
-    if (sys.env.get("GRAFT_STREAM_PROGRESS").contains("1"))
-      q.recentProgress.foreach(p => System.err.println(s"[progress:$tag] ${p.json}"))
-
-  private def withProgressTap[T](s: SparkSession)(body: => T): T =
-    if (!sys.env.get("GRAFT_STREAM_PROGRESS").contains("1")) body
-    else graft.GraftSession.withConfs(s,
-      "spark.sql.streaming.numRecentProgressUpdates" -> Some("100000"))(body)
 
   /** Read a per-batch foreachBatch sink back. A healthy two-drain run
     * ALWAYS commits at least one batch (the sentinel file alone forces
@@ -2410,8 +2249,8 @@ object StreamQueries {
              |SELECT window_start, event_type, count(*) AS n
              |FROM e GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
 
-      // The per-user grouped cents sum the v2 snapshot must reproduce.
-      "q181_state_v2_stream" ->
+      // The per-user grouped cents sum the TTL snapshot must reproduce.
+      "q181_state_ttl_stream" ->
         raw"""SELECT CAST(user_id AS VARCHAR) AS from_account,
              |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS balance_cents
              |FROM events GROUP BY 1 ORDER BY from_account""".stripMargin,
@@ -2497,12 +2336,6 @@ object StreamQueries {
       // funnel — the TTL contract itself, hashed on the real corpus.
       "q199_funnel_ttl_stream" -> EventQueries.oracles("q191_funnel"),
 
-      // q191's oracle text verbatim: the transformWithState (v2) funnel
-      // and its TTL flavor must land the IDENTICAL bytes — the v1/v2
-      // cross-proof on the engine's last v1-only custom-state family.
-      "q207_funnel_v2" -> EventQueries.oracles("q191_funnel"),
-      "q208_funnel_ttl_v2" -> EventQueries.oracles("q191_funnel"),
-
       // The INDEPENDENT formulation of the stream-stream as-of: an
       // explicit pair join + per-trade argmax by (quote ts, event_id),
       // LEFT-preserved so quote-less trades hash their NULLs too. The
@@ -2510,19 +2343,10 @@ object StreamQueries {
       // watermark-proof emission must land these exact rows.
       "q198_asof_stream" -> asofOracle(window = ""),
 
-      // q198's oracle text verbatim: the transformWithState (v2) run must
-      // land the IDENTICAL bytes — the v1/v2 cross-proof on one oracle.
-      "q203_asof_stream_v2" -> asofOracle(window = ""),
-
       // Same formulation with the 48 h lookback window — the matched=0
       // class (a trade whose nearest quote is too old, or none at all)
       // hashes its NULLs like any other row.
       "q200_asof_tolerance_stream" ->
-        asofOracle(window = s" AND q.ts >= t.ts - INTERVAL $AsofToleranceHours HOUR"),
-
-      // q200's oracle text verbatim: the v2 run of the tolerance flavor
-      // must land the identical bytes (the q203 cross-proof, bounded end).
-      "q204_asof_tolerance_v2" ->
         asofOracle(window = s" AND q.ts >= t.ts - INTERVAL $AsofToleranceHours HOUR"),
 
       // The FORWARD direction: window flipped to [t, t + tol], argmin by
@@ -2535,23 +2359,11 @@ object StreamQueries {
       // The NEAREST direction: q106/q114's exact rank chain — least µs
       // distance, backward-first, greatest-backward-key /
       // least-forward-key — inside the ±tolerance pair join.
-      "q202_asof_nearest_stream" -> nearestOracle,
-
-      // q201's oracle text verbatim: the v2 (transformWithState) forward
-      // run must land the IDENTICAL bytes — the cross-proof, forward
-      // direction.
-      "q205_asof_forward_v2" ->
-        asofOracle(
-          window = s" AND q.ts <= t.ts + INTERVAL $AsofToleranceHours HOUR",
-          forward = true),
-
-      // q202's oracle text verbatim: the v2 nearest run closes the
-      // 3-direction × 2-API matrix on one oracle per direction.
-      "q206_asof_nearest_v2" -> nearestOracle
+      "q202_asof_nearest_stream" -> nearestOracle
     )
   }
 
-  /** The q202/q206 shared oracle: q106/q114's exact rank chain — least µs
+  /** q202's oracle: q106/q114's exact rank chain — least µs
     * distance, backward-first, greatest-backward-key / least-forward-key
     * — inside the ±tolerance pair join, LEFT-preserved.
     */

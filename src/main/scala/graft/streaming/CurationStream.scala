@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.TextFunctions.{minhashFromPairs, minhashPairs, qualityScore, shinglesOf, tokens}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Streaming twin of the batch curation pipeline (q40/q46 family): a
@@ -275,37 +275,7 @@ object CurationStream {
     * sets are distinct lengths), and when the batch's values are a subset
     * of the baseline's the union adds nothing.
     */
-  def ksOf(counts: DataFrame, baseline: DataFrame): DataFrame = {
-    val pairs = counts.select(col("window_start"), col("source")).distinct()
-    val nW = counts
-      .groupBy(col("window_start"), col("source"))
-      .agg(sum(col("cs")).as("nw"))
-    val byPair = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("window_start"), col("source"))
-    val grid = baseline
-      .select(col("v"), col("qb"))
-      .unionByName(
-        counts.select(col("v")).distinct()
-          .join(baseline.select(col("v")), Seq("v"), "left_anti")
-          .select(col("v"), lit(null).cast("long").as("qb")))
-      .withColumn(
-        "qb",
-        coalesce(
-          last(col("qb"), ignoreNulls = true).over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy(col("v"))
-              .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)),
-          lit(0L)))
-    pairs
-      .crossJoin(broadcast(grid))
-      .join(counts, Seq("window_start", "source", "v"), "left")
-      .na.fill(0L, Seq("cs"))
-      .withColumn("c", sum(col("cs")).over(byPair.orderBy(col("v"))))
-      .join(broadcast(nW), Seq("window_start", "source"))
-      .withColumn("qw", expr("c * 1048576 div nw"))
-      .groupBy(col("window_start"), col("source"))
-      .agg(min(col("nw")).as("n_docs"), max(abs(col("qw") - col("qb"))).as("ks_q20"))
-  }
+  def ksOf(counts: DataFrame, baseline: DataFrame): DataFrame = ksSpine(counts, baseline)()
 
   /** [[ksOf]] and [[quantilesOf]] FUSED over one union-grid pass — the
     * multi-axis monitors (q216/q217/q219) consume both off the same `len`
@@ -327,6 +297,19 @@ object CurationStream {
     * (window_start, source, n_docs, ks_q20, p50, p90, p99).
     */
   def ksQuantilesOf(counts: DataFrame, baseline: DataFrame): DataFrame = {
+    def q(p: Int) = min(when(col("c") * 100 >= col("nw") * p, col("v"))).as(s"p$p")
+    ksSpine(counts, baseline)(q(50), q(90), q(99))
+  }
+
+  /** The shared KS spine of [[ksOf]] and [[ksQuantilesOf]]: the union grid
+    * (baseline values ∪ the window's values, each carrying the baseline
+    * step's value `qb`), the counts join, the cumulative count `c` per
+    * (window_start, source) over `v`, the pair total `nw` and the
+    * quantized window ECDF `qw`, aggregated per pair into
+    * (n_docs, ks_q20) followed by `extra` — further aggregates over the
+    * same grid rows.
+    */
+  private def ksSpine(counts: DataFrame, baseline: DataFrame)(extra: Column*): DataFrame = {
     val pairs = counts.select(col("window_start"), col("source")).distinct()
     val nW = counts
       .groupBy(col("window_start"), col("source"))
@@ -347,7 +330,6 @@ object CurationStream {
               .orderBy(col("v"))
               .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)),
           lit(0L)))
-    def q(p: Int) = min(when(col("c") * 100 >= col("nw") * p, col("v"))).as(s"p$p")
     pairs
       .crossJoin(broadcast(grid))
       .join(counts, Seq("window_start", "source", "v"), "left")
@@ -358,8 +340,7 @@ object CurationStream {
       .groupBy(col("window_start"), col("source"))
       .agg(
         min(col("nw")).as("n_docs"),
-        max(abs(col("qw") - col("qb"))).as("ks_q20"),
-        q(50), q(90), q(99))
+        max(abs(col("qw") - col("qb"))).as("ks_q20") +: extra: _*)
   }
 
   /** The live DISTRIBUTION-SHAPE monitor (q171's sibling — KL watches the

@@ -63,10 +63,14 @@ object PaymentPipeline {
     * compacted row, or both — identical (key, value, batch_id) content
     * either way, and `max_by(balance, batch_id)` is tie-stable on
     * duplicates. A production deployment maps this 1:1 onto Delta/Iceberg
-    * MERGE + OPTIMIZE with snapshot-isolated reads (here, plain parquet on
-    * a local FS: a read that lists a file the compactor deletes mid-scan
-    * would need `spark.sql.files.ignoreMissingFiles` — the harness drives
-    * batches and lookups from one thread).
+    * MERGE + OPTIMIZE with snapshot-isolated reads. Here it is plain
+    * parquet on a local FS, and reads are NOT safe against a concurrent
+    * [[compact]]: a `get()` that planned its scan against a file the
+    * compactor then deletes fails with `FAILED_READ_FILE.FILE_NOT_EXIST`.
+    * [[RestService]] serves GETs from a 4-thread pool while the stream's
+    * batches append and compact, so a REST read during a compaction can
+    * hit this (HTTP 500). ROADMAP direction 4 tracks the fix (versioned
+    * snapshot directories published by an atomic pointer rename).
     *
     * @param compactEvery rewrite cadence in batches; <= 0 disables.
     * @param compactPartitions output files per compaction — sized here for
@@ -301,8 +305,14 @@ object PaymentPipeline {
   }
 
   /** Wire the full reference topology over a streaming payment DataFrame
-    * (from [[fromKafka]], a MemoryStream, or any streaming source with the
-    * payment schema).
+    * (from [[fromKafka]], or any streaming source with the payment schema).
+    * The topology runs TWO queries over `payments` (balance + routing), so
+    * the source must serve several readers: file, socket or Kafka. A
+    * `MemoryStream` does not: each query's offset commit trims the buffer
+    * the other still reads, so unless both queries are driven in lockstep
+    * (`processAllAvailable` on each after every `addData`, as
+    * PaymentPipelineSpec does) one fails with "Offsets committed out of
+    * order".
     *
     * @param sinkDir  rows routed to the FOO/BAR "topics" land in
     *                 `sinkDir/topic=rails-foo-topic/` etc. as parquet —

@@ -299,19 +299,19 @@ class StreamQueriesSpec extends AnyFunSuite with SparkSpec {
     assert(rows.toSeq == batch.toSeq, "chained streaming rollup differs from the batch twin")
   }
 
-  test("q181: the v2 snapshot equals the batch grouped sum; provider conf is restored") {
+  test("q181: the TTL snapshot equals the batch grouped sum; the state-store provider conf is untouched") {
     import org.apache.spark.sql.functions._
     val key  = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
-    val rows = SparkEntry.queries("q181_state_v2_stream")(spark, dir).collect()
-    assert(spark.conf.getOption(key) == prev, "q181 must restore the state-store provider conf")
+    val rows = SparkEntry.queries("q181_state_ttl_stream")(spark, dir).collect()
+    assert(spark.conf.getOption(key) == prev, "q181 must leave the state-store provider conf as it found it")
     assert(rows.nonEmpty)
     val batch = graft.sources.Tables.events(spark, dir)
       .groupBy(col("user_id").cast("string").as("from_account"))
       .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("balance_cents"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(rows.map(r => r.getString(0) -> r.getLong(1)).toMap == batch,
-      "v2 streamed snapshot differs from the batch grouped sum")
+      "TTL streamed snapshot differs from the batch grouped sum")
   }
 
   test("session-window state recovers from a checkpoint: stop with every session open, restart, identical output") {

@@ -408,4 +408,56 @@ class AsofStreamJoinSpec extends AnyFunSuite with SparkSpec {
       AsofRow(101L, "GBPUSD", T0 - h, 0L, 0L, None, 0L)),
       s"got $out")
   }
+
+  // ---- stop/restart from a checkpoint
+
+  test("restore: the compacted anchor AND a pending trade survive a checkpoint stop/restart") {
+    val h = 3600L * 1000000L
+    val Seq(run1, run2) = runEpochs(Seq(
+      // EPOCH 1: a quote that must compact to the ANCHOR (wm sentinel far
+      // past it), plus a trade the run-1 watermark does NOT reach — it
+      // must stay PENDING through the stop/restart.
+      Seq(
+        ev(2L, T0, "q", 10L, 700L),
+        ev(4L, T0 + 10L * h, "q", 20L, 800L),
+        ev(4L, T0 + 600L * h, "t", 400L), // pending: wm only reaches 500h
+        ev(-1L, T0 + 500L * h, "__sentinel__", -1L)),
+      // EPOCH 2: a much-later trade for key 2 (only the RESTORED anchor
+      // can serve it — the quote that wins arrived 1000 h earlier and was
+      // compacted before the restart), a post-trade quote that must NOT
+      // match, and the closing sentinel that also resolves key 4's
+      // restored pending trade against its restored quote buffer/anchor.
+      Seq(
+        ev(2L, T0 + 1000L * h, "t", 200L),
+        ev(2L, T0 + 1001L * h, "q", 11L, 900L), // after the trade: must not serve it
+        ev(-1L, T0 + 1100L * h, "__sentinel__", -1L))))(AsofStreamJoin.joined(_))
+    assert(run1.isEmpty, s"run 1 must emit nothing (trade still pending): $run1")
+    assert(run2.sortBy(_.event_id) == Seq(
+      row(200L, 2L, T0 + 1000L * h, T0, 10L, 700L, 1L),
+      row(400L, 4L, T0 + 600L * h, T0 + 10L * h, 20L, 800L, 1L)),
+      s"restored state must serve both the anchor match and the pending trade: $run2")
+  }
+
+  test("restore: the nearest ±window buffer and a pending trade survive a checkpoint stop/restart") {
+    val h   = 3600L * 1000000L
+    val tol = 5L * h
+    val Seq(run1, run2) = runEpochs(Seq(
+      // EPOCH 1: a backward quote 3h before the trade and the trade itself
+      // — the trade's FORWARD half-window (t + 5h) is NOT cleared by the
+      // run-1 watermark, so it must stay pending across the restart with
+      // its candidate quote buffered (no anchor to fall back on).
+      Seq(
+        ev(7L, T0, "q", 10L, 700L),
+        ev(7L, T0 + 3L * h, "t", 300L),
+        ev(-1L, T0 + 4L * h, "__sentinel__", -1L)), // wm < t + tol
+      // EPOCH 2: a closer FORWARD quote arrives after the restart — it
+      // must beat the restored backward candidate (2h < 3h, strictly
+      // closer); the sentinel then clears the half-window.
+      Seq(
+        ev(7L, T0 + 5L * h, "q", 11L, 800L), // |Δ| = 2h — the winner
+        ev(-1L, T0 + 20L * h, "__sentinel__", -1L))))(AsofStreamJoin.joinedNearest(_, tol))
+    assert(run1.isEmpty, s"run 1 must emit nothing (forward half-window open): $run1")
+    assert(run2 == Seq(row(300L, 7L, T0 + 3L * h, T0 + 5L * h, 11L, 800L, 1L)),
+      s"the restored pending trade must resolve against the post-restart closer quote: $run2")
+  }
 }

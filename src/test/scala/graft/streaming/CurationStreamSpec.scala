@@ -327,6 +327,32 @@ class CurationStreamSpec extends AnyFunSuite with SparkSpec {
     assert((got._3, got._4) == ((3L, 349526L)), s"union-grid KS: $got")
   }
 
+  test("ksQuantilesOf equals ksOf joined with quantilesOf, window values outside the baseline included") {
+    import org.apache.spark.sql.functions.col
+    def t(sec: Long) = new Timestamp(sec * 1000L)
+    // baseline lengths {2, 4, 4}. Window 0 holds baseline lengths only;
+    // window 60/s1 holds lengths 1, 3 and 9 (none in the baseline) beside
+    // a 4, so its union grid gains three points and its p50 (c = 3, 5, 6,
+    // 10 of n = 10 → the first c ≥ 5) is the out-of-baseline 3; s2 is a
+    // one-value window entirely off the baseline.
+    val baseline = CurationStream.lengthBaseline(Seq("ab", "abcd", "wxyz").toDF("text"))
+    val counts = Seq(
+      (t(0), "s1", 2L, 1L), (t(0), "s1", 4L, 3L),
+      (t(60), "s1", 1L, 3L), (t(60), "s1", 3L, 2L), (t(60), "s1", 4L, 1L), (t(60), "s1", 9L, 4L),
+      (t(60), "s2", 9L, 1L))
+      .toDF("window_start", "source", "v", "cs")
+    val cols = Seq("window_start", "source", "n_docs", "ks_q20", "p50", "p90", "p99").map(col)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select(cols: _*)
+      .as[(Timestamp, String, Long, Long, Long, Long, Long)]
+      .collect().toSeq.sortBy(r => (r._1.getTime, r._2))
+    val fused = rows(CurationStream.ksQuantilesOf(counts, baseline))
+    val unfused = rows(CurationStream.ksOf(counts, baseline)
+      .join(CurationStream.quantilesOf(counts).drop("n_docs"), Seq("window_start", "source")))
+    assert(fused.map(r => (r._1, r._2)) == Seq((t(0), "s1"), (t(60), "s1"), (t(60), "s2")), s"pairs: $fused")
+    assert(fused(1)._5 == 3L && fused(1)._6 == 9L, s"out-of-baseline quantiles: ${fused(1)}")
+    assert(fused == unfused, s"fused != ksOf ⋈ quantilesOf:\n fused   $fused\n unfused $unfused")
+  }
+
   test("lang drift: per-window PSI matches the plain-Scala quantize-first referee; out-of-baseline category joins the grid") {
     implicit val sqlCtx = spark.sqlContext
     def t(sec: Long) = new Timestamp(sec * 1000L)

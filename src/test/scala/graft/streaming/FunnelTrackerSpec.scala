@@ -240,4 +240,21 @@ class FunnelTrackerSpec extends AnyFunSuite with SparkSpec {
     ))
     assert(out.isEmpty, s"no view → never entered the funnel: $out")
   }
+
+  test("restore: an OPEN funnel's candidate buffers survive a checkpoint stop/restart") {
+    val h = 3600L * 1000000L
+    val Seq(run1, run2) = runEpochs(Seq(
+      // EPOCH 1: view + click land; the watermark stays BELOW the close
+      // deadline, so the funnel stays open across the restart.
+      Seq(ev(1, T0, "view"), ev(1, T0 + h, "click"), ev(-1L, T0 + StepUs, "__sentinel__")), // wm < t1 + 2·step
+      // EPOCH 2: the purchase arrives after the restart — only the
+      // RESTORED t1/click buffers can chain it; then the sentinel closes.
+      Seq(
+        ev(1, T0 + StepUs + h, "purchase"), // within step of the click, past run-1 wm
+        ev(-1L, T0 + 3L * StepUs, "__sentinel__"))))(FunnelTracker.funnels(_, StepUs, HorizonUs))
+    assert(run1.isEmpty, s"run 1 must emit nothing (funnel still open): $run1")
+    // t3 − t1 = step + 1h = 25h ≤ the 36h horizon → completed
+    assert(run2 == Seq(FunnelRow(1L, T0, T0 + h, T0 + StepUs + h, 3L, 1L)),
+      s"the restored open funnel must chain the post-restart purchase: $run2")
+  }
 }

@@ -10,30 +10,26 @@ import java.nio.file.Files
 
 /** HOT-KEY STRESS — the one scale dimension the corpus never probes: all
   * shipped keys are benign, but a 100 TB feed has keys holding millions of
-  * in-window events, and `flatMapGroupsWithState`/`transformWithState`
-  * state is PER-KEY — it cannot be salted without changing semantics. This
+  * in-window events, and `flatMapGroupsWithState` state is PER-KEY — it cannot be salted without changing semantics. This
   * spec drives one crafted hot key (one key ≫ all others) through the
   * custom-state families and pins the HONEST ENVELOPE each one's pruning
   * actually guarantees (measured numbers in SCALE.md §hot-key):
   *
-  *   - BACKWARD as-of (q198/q203): the buffer is TRANSIENT — a micro-
+  *   - BACKWARD as-of (q198): the buffer is TRANSIENT — a micro-
   *     batch's hot-key arrivals live in state only until the next
   *     watermark advance, then compact to ONE anchor. Peak per-key state
   *     = one micro-batch's arrivals for that key; steady = 1 row.
   *   - NEAREST/tolerance as-of (q200/q202): quotes inside the ±tolerance
   *     window around the floor are PERSISTENT state — a key streaming K
   *     quotes/sec holds K·tol quotes until the window passes. The
-  *     mitigation IS the tolerance: size it to the rate (and the v2 port
-  *     makes the append itself O(1) — ListState merge-write, no
-  *     whole-buffer rewrite per arrival).
+  *     mitigation IS the tolerance: size it to the rate.
   *   - FUNNEL (q194/q199): buffered candidates are bounded by the 2·step
   *     SPAN, not by count — a hot user holds arrival-rate × 2·step
   *     events until the funnel closes, then exactly one row emits and
   *     the state drops to a tombstone (zero past close + TTL).
   *
   * Each test also proves CORRECTNESS is unaffected by the skew (the
-  * argmax/funnel rows are exact), and the v1/v2 machineries agree on the
-  * same hot fixture.
+  * argmax/funnel rows are exact).
   */
 class HotKeyStressSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -66,10 +62,6 @@ class HotKeyStressSpec extends AnyFunSuite with SparkSpec {
 
   private def stateRows(q: StreamingQuery): Long = q.recentProgress.reverse
     .find(_.stateOperators.nonEmpty).map(_.stateOperators.head.numRowsTotal).getOrElse(-1L)
-
-  private def lastBatchMs(q: StreamingQuery): Long = q.recentProgress.reverse
-    .find(p => Option(p.durationMs).exists(_.containsKey("triggerExecution")))
-    .map(_.durationMs.get("triggerExecution").toLong).getOrElse(-1L)
 
   /** One hot key carrying `n` quotes, 200 cold keys with 10 each, plus
     * one hot trade AFTER every quote (its argmax pins correctness).
@@ -198,75 +190,5 @@ class HotKeyStressSpec extends AnyFunSuite with SparkSpec {
       assert(rows == Seq(FunnelRow(1L, T0, T0 + 1L, T0 + step + 1L, 3L, 1L)),
         s"hot skew must not change the funnel chain: $rows")
     } finally q.stop()
-  }
-
-  /** One hot-burst run through either machinery; returns (rows, wall ms). */
-  private def runBurst(
-      label: String,
-      n: Int,
-      mk: org.apache.spark.sql.Dataset[SideEvent[Long, Long]] =>
-        org.apache.spark.sql.Dataset[AsofRow[Long, Long]]): (Seq[AsofRow[Long, Long]], Long) = {
-    val (fixture, _) = hotFixture(n)
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SideEvent[Long, Long]]
-    val tmp   = Files.createTempDirectory("graft-hotkey")
-    graft.sources.SessionMemo.deleteOnExit(tmp)
-    val name = s"hot_${label}_${System.nanoTime()}"
-    val t0 = System.nanoTime()
-    val q = mk(input.toDS())
-      .writeStream.queryName(name).outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt").format("memory").start()
-    try {
-      input.addData(fixture: _*)
-      q.processAllAvailable()
-      input.addData(ev(-1L, T0 + n.toLong + 2L * H, "__sentinel__", -1L))
-      q.processAllAvailable()
-      input.addData(ev(-1L, T0 + n.toLong + 3L * H, "__sentinel__", -1L))
-      q.processAllAvailable()
-    } finally q.stop()
-    (spark.table(name).as[AsofRow[Long, Long]].collect().toSeq.sortBy(_.event_id),
-      (System.nanoTime() - t0) / 1000000L)
-  }
-
-  test("v1 and v2 agree on the hot fixture") {
-    val n = 2000
-    val (_, expected) = hotFixture(n)
-    val (v1, v1Ms) = runBurst("v1", n, ds => AsofStreamJoin.joined(ds))
-    val (v2, v2Ms) = withRocksDb(runBurst("v2", n, ds => AsofStreamV2.joined(ds)))
-    info(s"hot-key v1 vs v2: n=$n v1=${v1Ms}ms v2=${v2Ms}ms")
-    assert(v1 == Seq(expected) && v2 == v1, s"\n v1 $v1\n v2 $v2")
-  }
-
-  test("MEASURED: one appendList merge per key per trigger keeps hot-key bursts absorbable (v2)") {
-    // The measured history behind the processor's batching (SCALE.md
-    // §hot-key carries both curves): per-ARRIVAL ListState.appendValue is
-    // superlinear in Spark 4.1.2's RocksDB merge path — a 16k single-key
-    // single-batch burst took 736 s (4 k → 16 k cost 40× the wall).
-    // handleInputRows therefore buffers the invocation's arrivals and
-    // writes ONE appendList per side — the same 16 k burst now lands in
-    // ~4 s, matching v1's fold envelope. The guard pins the FIXED
-    // behavior: a 16k-scale burst must stay within the one-merge budget
-    // (a regression back to per-arrival cost would blow the bound by two
-    // orders). Override sizes via GRAFT_HOTKEY_V2N="a,b" for full curves.
-    // 16000 stays IN the defaults so the regression guard below is armed
-    // in a normal test run (batched, the 16k burst costs ~4 s; a revert
-    // to per-arrival appends would trip the assert at ~736 s, not pass
-    // silently).
-    val sizes = sys.env.getOrElse("GRAFT_HOTKEY_V2N", "500,2000,16000")
-      .split(",").map(_.trim.toInt).toSeq
-    val timed = withRocksDb {
-      sizes.map { n =>
-        val (rows, ms) = runBurst(s"v2curve$n", n, ds => AsofStreamV2.joined(ds))
-        assert(rows.size == 1 && rows.head.matched == 1L, s"n=$n wrong rows: $rows")
-        val perAppendUs = ms * 1000.0 / n
-        info(f"v2 burst n=$n%6d wall=${ms}%6d ms  per-append=${perAppendUs}%8.1f us")
-        (n, ms, perAppendUs)
-      }
-    }
-    timed.filter(_._1 >= 16000).foreach { case (n, ms, _) =>
-      assert(ms < 60000L,
-        s"a $n-event single-key burst took ${ms} ms — two orders over the one-merge " +
-          s"budget; the per-arrival append regression is back, re-measure SCALE.md §hot-key")
-    }
   }
 }

@@ -18,17 +18,17 @@ import java.nio.file.Files
   * event orders within micro-batches, duplicate timestamps on a coarse
   * lattice (tie chains fire constantly), random watermark-advance sentinel
   * placement, random micro-batch boundaries, and a random stop/restart
-  * epoch split — and asserts the full machinery triangle on every case:
+  * epoch split — and asserts on every case that
   *
-  *   v1 (flatMapGroupsWithState)  ≡  v2 (transformWithState + RocksDB)
-  *                      ≡  plain-Scala brute-force oracle
+  *   uninterrupted run  ≡  stop/restart run  ≡  plain-Scala brute-force oracle
   *
   * on all THREE as-of directions (backward unbounded + tolerance, forward,
-  * nearest) and the funnel (unbounded-TTL vs oracle; finite random TTL as a
-  * v1≡v2 cross-check). Each generated case lives under its own key, so one
-  * stream run carries every case per mode; events are fed in globally
-  * non-decreasing event-time chunks so nothing is watermark-late and the
-  * batch oracle (which sees every event) stays the ground truth.
+  * nearest) and the funnel (unbounded-TTL vs oracle; finite random TTL as
+  * an uninterrupted ≡ restarted cross-check). Each generated case lives
+  * under its own key, so one stream run carries every case per mode;
+  * events are fed in globally non-decreasing event-time chunks so nothing
+  * is watermark-late and the batch oracle (which sees every event) stays
+  * the ground truth.
   *
   * Why the oracle is trustworthy: for every mode it is a one-line argmax /
   * argmin / min-chain over the full per-key event multiset — no state, no
@@ -143,44 +143,7 @@ class StateMachineAdversarySpec extends AnyFunSuite with SparkSpec {
     sortRows(spark.table(name).as[AsofRow[Long, Long]].collect().toSeq)
   }
 
-  /** Two-epoch file-source run with a stop/restart at a random chunk
-    * boundary (each epoch written as one parquet file; AvailableNow drains
-    * it, the query stops, and the second drain restores from checkpoint).
-    */
-  private def runRestart(
-      op: Dataset[SideEvent[Long, Long]] => Dataset[AsofRow[Long, Long]],
-      epochs: (Seq[SideEvent[Long, Long]], Seq[SideEvent[Long, Long]]),
-      tag: String): Seq[AsofRow[Long, Long]] = {
-    val tmp = Files.createTempDirectory(s"graft-adv-restart-$tag")
-    graft.sources.SessionMemo.deleteOnExit(tmp)
-    val watch = s"$tmp/watch"
-    val outP  = s"$tmp/out"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
-    def drain(label: String, rows: Seq[SideEvent[Long, Long]]): Unit = {
-      rows.toDS().toDF().coalesce(1).write.parquet(s"$watch/$label")
-      val evs = spark.readStream
-        .schema(Seq.empty[SideEvent[Long, Long]].toDS().schema)
-        .parquet(s"$watch/*")
-        .as[SideEvent[Long, Long]]
-      val q = op(evs).toDF().writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          batch.write.mode("append").parquet(outP); ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
-    drain("e1", epochs._1)
-    drain("e2", epochs._2)
-    if (new java.io.File(outP).exists())
-      sortRows(spark.read.parquet(outP).as[AsofRow[Long, Long]].collect().toSeq)
-    else Seq.empty
-  }
-
-  test(s"as-of adversary: v1 == v2 == brute force on $Cases random cases x 4 modes (random batches, ties, sentinels, restart)") {
+  test(s"as-of adversary: uninterrupted and restarted runs == brute force on $Cases random cases x 4 modes (random batches, ties, sentinels)") {
     val histories = sample(genAsofCase, Cases, seed = 0xA50FL)
     val cases = histories.zipWithIndex.map { case ((qs, ts), i) => AsofCase(i + 1L, qs, ts) }
     // unique, deterministic event ids (the tie chains pick by id, and
@@ -230,27 +193,19 @@ class StateMachineAdversarySpec extends AnyFunSuite with SparkSpec {
     val batches = chunked[SideEvent[Long, Long]](events, _.us, sentinel, rng)
     // random restart boundary: a chunk index strictly inside the feed
     val split  = 1 + rng.nextInt(math.max(1, batches.size - 1))
-    val epochs = (batches.take(split).flatten, batches.drop(split).flatten)
+    val epochs = Seq(batches.take(split).flatten, batches.drop(split).flatten)
 
     val modes: Seq[(String, String, Long, Dataset[SideEvent[Long, Long]] => Dataset[AsofRow[Long, Long]])] = Seq(
       ("backward_unbounded", "backward", Long.MaxValue, AsofStreamJoin.joined(_: Dataset[SideEvent[Long, Long]])),
       ("backward_tol", "backward", Tol, AsofStreamJoin.joined(_: Dataset[SideEvent[Long, Long]], Tol)),
       ("forward_tol", "forward", Tol, AsofStreamJoin.joinedForward(_: Dataset[SideEvent[Long, Long]], Tol)),
       ("nearest_tol", "nearest", Tol, AsofStreamJoin.joinedNearest(_: Dataset[SideEvent[Long, Long]], Tol)))
-    val v2ops: Map[String, Dataset[SideEvent[Long, Long]] => Dataset[AsofRow[Long, Long]]] = Map(
-      "backward_unbounded" -> (AsofStreamV2.joined(_: Dataset[SideEvent[Long, Long]])),
-      "backward_tol" -> (AsofStreamV2.joined(_: Dataset[SideEvent[Long, Long]], Tol)),
-      "forward_tol" -> (AsofStreamV2.joinedForward(_: Dataset[SideEvent[Long, Long]], Tol)),
-      "nearest_tol" -> (AsofStreamV2.joinedNearest(_: Dataset[SideEvent[Long, Long]], Tol)))
-
-    modes.foreach { case (tag, mode, tol, v1op) =>
+    modes.foreach { case (tag, mode, tol, op) =>
       val expected = oracle(mode, tol)
-      val gotV1 = runMem(v1op, batches, s"v1_$tag")
-      assert(gotV1 == expected, s"[$tag] v1 != oracle\n v1: $gotV1\n or: $expected")
-      val gotV2 = withRocksDb(runMem(v2ops(tag), batches, s"v2_$tag"))
-      assert(gotV2 == expected, s"[$tag] v2 != oracle\n v2: $gotV2\n or: $expected")
-      val gotV2R = withRocksDb(runRestart(v2ops(tag), epochs, tag))
-      assert(gotV2R == expected, s"[$tag] v2-restart(split=$split) != oracle\n v2: $gotV2R\n or: $expected")
+      val got = runMem(op, batches, tag)
+      assert(got == expected, s"[$tag] stream != oracle\n got: $got\n or: $expected")
+      val gotR = sortRows(runEpochs(epochs)(op).flatten) // stop/restart at the split
+      assert(gotR == expected, s"[$tag] restart(split=$split) != oracle\n got: $gotR\n or: $expected")
     }
   }
 
@@ -290,10 +245,10 @@ class StateMachineAdversarySpec extends AnyFunSuite with SparkSpec {
       .option("checkpointLocation", s"$tmp/ckpt").format("memory").start()
     try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
-    spark.table(name).as[FunnelRow].collect().toSeq.sortBy(_.user_id)
+    spark.table(name).as[FunnelRow].collect().toSeq.sortBy(r => (r.user_id, r.t1_us))
   }
 
-  test(s"funnel adversary: v1 == v2 == brute force on $Cases random users; finite random TTL keeps v1 == v2") {
+  test(s"funnel adversary: uninterrupted and restarted runs == brute force on $Cases random users; finite random TTL survives the restart") {
     val histories = sample(genFunnelCase, Cases, seed = 0xF00E1L)
     val users  = histories.zipWithIndex.map { case (evs, i) => (i + 1L, evs) }
     val events = users.flatMap { case (uid, evs) =>
@@ -304,17 +259,25 @@ class StateMachineAdversarySpec extends AnyFunSuite with SparkSpec {
     val batches = chunked[FunnelEvent](events, _.us, sentinel, rng)
     val expected = funnelOracle(users)
 
-    val gotV1 = runFunnel(FunnelTracker.funnels(_, Step, Horizon), batches, "v1")
-    assert(gotV1 == expected, s"funnel v1 != oracle\n v1: $gotV1\n or: $expected")
-    val gotV2 = withRocksDb(runFunnel(FunnelTrackerV2.funnels(_, Step, Horizon), batches, "v2"))
-    assert(gotV2 == expected, s"funnel v2 != oracle\n v2: $gotV2\n or: $expected")
+    val ttl   = (1L + rng.nextInt(8).toLong) * Q
+    // random restart boundary: a chunk index strictly inside the feed
+    val split = 1 + rng.nextInt(math.max(1, batches.size - 1))
+    val epochs = Seq(batches.take(split).flatten, batches.drop(split).flatten)
+    def restarted(op: Dataset[FunnelEvent] => Dataset[FunnelRow]): Seq[FunnelRow] =
+      runEpochs(epochs)(op).flatten.sortBy(r => (r.user_id, r.t1_us))
+
+    val got = runFunnel(FunnelTracker.funnels(_, Step, Horizon), batches, "unbounded")
+    assert(got == expected, s"funnel != oracle\n got: $got\n or: $expected")
+    val gotR = restarted(FunnelTracker.funnels(_, Step, Horizon))
+    assert(gotR == expected, s"funnel restart(split=$split) != oracle\n got: $gotR\n or: $expected")
 
     // finite random TTL: "first view ever" relaxes to "first view within
-    // TTL" — not oracle-expressible above, but the two machineries must
-    // still agree byte-for-byte on the same feed
-    val ttl = (1L + rng.nextInt(8).toLong) * Q
-    val gotV1T = runFunnel(FunnelTracker.funnels(_, Step, Horizon, ttl), batches, "v1ttl")
-    val gotV2T = withRocksDb(runFunnel(FunnelTrackerV2.funnels(_, Step, Horizon, ttl), batches, "v2ttl"))
-    assert(gotV1T == gotV2T, s"funnel ttl=$ttl: v1 != v2\n v1: $gotV1T\n v2: $gotV2T")
+    // TTL" — not oracle-expressible above, and expiry depends on where
+    // the micro-batch boundaries fall, so the reference is an
+    // uninterrupted run over the SAME two batches: the stop/restart must
+    // not change a row (the TTL'd tombstones and timeouts restore too)
+    val gotT  = runFunnel(FunnelTracker.funnels(_, Step, Horizon, ttl), epochs, "ttl")
+    val gotTR = restarted(FunnelTracker.funnels(_, Step, Horizon, ttl))
+    assert(gotT == gotTR, s"funnel ttl=$ttl: uninterrupted != restart(split=$split)\n run: $gotT\n restart: $gotTR")
   }
 }
